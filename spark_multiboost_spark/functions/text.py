@@ -421,14 +421,21 @@ def docpipe(spark: SparkSession, sf_dir: str) -> DataFrame:
             bcount().alias("n_docs"),
             F.sum(F.when(F.col("rn") > 1, 1).otherwise(0)).cast("bigint").alias("n_dups_removed"),
             F.sum(F.when(F.col("rn") == 1, F.col("n_tokens")).otherwise(0)).cast("bigint").alias("kept_tokens"),
-            F.round(
-                F.sum(
-                    F.when(F.col("rn") == 1, F.col("avg_token_len"))
-                    .otherwise(0.0)
-                    .cast("decimal(18,6)")
-                ).cast("double")
-                / F.nullif(F.sum(kept), F.lit(0)),
-                6,
+            # floor(x*1e6 + 0.5)/1e6 is the oracle's double ROUND step for
+            # step; F.round renders the double in decimal first and so
+            # rounds some exact half ties (318.797667/58) the other way
+            (
+                F.floor(
+                    F.sum(
+                        F.when(F.col("rn") == 1, F.col("avg_token_len"))
+                        .otherwise(0.0)
+                        .cast("decimal(18,6)")
+                    ).cast("double")
+                    / F.nullif(F.sum(kept), F.lit(0))
+                    * 1e6
+                    + 0.5
+                )
+                / 1e6
             ).alias("kept_avg_token_len"),
         )
         .orderBy("lang")

@@ -25,6 +25,15 @@ Math (Schapire & Singer 1999, BoosTexter 2000):
   Z(j,theta) = 2 sum_l sqrt(W_+^l W_-^l)   (minimized over candidates)
   weight update: w' = w exp(-y v_l phi(x)) / Z_norm
 
+One search kernel: every stump search in the package — the training loop
+(:func:`stump_class_weights`), the fused round-one plan
+(:func:`uniform_class_weights`), the salted variant and the sparse / prefix /
+abstaining A4-A5 queries — runs the same two steps, :func:`_weight_sums`
+(pre-aggregate weights by (feature, value, class)) then
+:func:`_class_weights` (per-(feature, class) prefix and total windows, then
+the W_+ / W_- projection).  One label lift, :func:`mlp_long`, serves single
+labels and label sets alike.
+
 Scale posture (SURVEY §4.2): the candidate search pre-aggregates weights by
 (feature, value, class) BEFORE the window prefix-sum, so the window input is
 |distinct values| x K per feature, not m x K; the per-feature window is the
@@ -53,28 +62,16 @@ class Stump:
 
 
 def mlp_long(emb: DataFrame, num_classes: int = 10) -> DataFrame:
-    """Lift single-label rows to the multi-label long form
-    (id, class, y in {+1,-1}) — FIXTURES.md §2.1."""
+    """The AdaBoost.MH label lift to the long form (id, class, y in
+    {+1,-1}) — FIXTURES.md §2.1: y[i, l] = +1 iff l ∈ labels_i.  Reads the
+    ARRAY<INT> label set ``labels`` (BoosTexter label SETS, the reference's
+    core use case) when ``emb`` has one, else the single ``label`` as the
+    |labels| = 1 case."""
+    labels = F.col("labels") if "labels" in emb.columns else F.array("label")
     return emb.select(
         F.col("vec_id").alias("id"),
         F.explode(F.sequence(F.lit(0), F.lit(num_classes - 1))).alias("class"),
-        "label",
-    ).select(
-        "id",
-        "class",
-        F.when(F.col("class") == F.col("label"), 1).otherwise(-1).alias("y"),
-    )
-
-
-def mlp_long_multi(emb: DataFrame, num_classes: int = 10) -> DataFrame:
-    """True multi-label long form (BoosTexter label SETS — the reference's
-    core use case, VERDICT r8 item 3): ``labels`` is an ARRAY<INT> column;
-    y[i, l] = +1 iff l ∈ labels_i.  The single-label :func:`mlp_long` is
-    the |labels| = 1 special case."""
-    return emb.select(
-        F.col("vec_id").alias("id"),
-        F.explode(F.sequence(F.lit(0), F.lit(num_classes - 1))).alias("class"),
-        "labels",
+        labels.alias("labels"),
     ).select(
         "id",
         "class",
@@ -96,32 +93,37 @@ def explode_features(emb: DataFrame) -> DataFrame:
     ).withColumn("feature", F.col("feature") + 1)
 
 
-def stump_class_weights(weighted: DataFrame, feats: DataFrame) -> DataFrame:
-    """A3+A4: for every candidate cut (feature, threshold=observed value) and
-    class, the Schapire-Singer weight masses W_+ / W_-.
-
-    Pipeline: join exploded features with the weighted long frame on id
-    (m*d x K rows), pre-aggregate to (feature, value, class) — the map-side
-    combine that keeps the window small — then one cumulative-sum window per
-    (feature, class) ordered by value.
-    """
-    joined = feats.join(weighted, "id")
-    grouped = joined.groupBy("feature", "value", "class").agg(
+def _weight_sums(
+    rows: DataFrame, keys: tuple[str, ...] = ("feature", "value", "class")
+) -> DataFrame:
+    """The search's map-side combine: weighted (y, weight) rows summed per
+    ``keys`` into the positive mass ``swp`` and the negative mass ``swm``.
+    Grouped by (feature, value, class) it keeps the window input at
+    |distinct values| x K per feature, not m x K."""
+    return rows.groupBy(*keys).agg(
         F.sum(F.when(F.col("y") == 1, F.col("weight")).otherwise(0.0)).alias("swp"),
         F.sum(F.when(F.col("y") == -1, F.col("weight")).otherwise(0.0)).alias("swm"),
     )
-    w_cum = (
-        Window.partitionBy("feature", "class")
-        .orderBy("value")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
+
+
+def _class_weights(
+    grouped: DataFrame, prefix: tuple[Column, Column] | None = None
+) -> DataFrame:
+    """The threshold search over (feature, value, class, swp, swm) sums:
+    per-(feature, class) prefix masses in value order and totals, combined
+    into W_+ / W_- for every (feature, threshold=value, class).  ``prefix``
+    replaces the one-window running sums of swp / swm (the salted variant
+    builds them in two stages); the totals and the projection are shared."""
     w_tot = Window.partitionBy("feature", "class")
+    if prefix is None:
+        w_cum = w_tot.orderBy("value").rowsBetween(Window.unboundedPreceding, 0)
+        prefix = (F.sum("swp").over(w_cum), F.sum("swm").over(w_cum))
     cum = grouped.select(
         "feature",
         F.col("value").alias("threshold"),
         "class",
-        F.sum("swp").over(w_cum).alias("p_plus"),
-        F.sum("swm").over(w_cum).alias("p_minus"),
+        prefix[0].alias("p_plus"),
+        prefix[1].alias("p_minus"),
         F.sum("swp").over(w_tot).alias("t_plus"),
         F.sum("swm").over(w_tot).alias("t_minus"),
     )
@@ -136,18 +138,25 @@ def stump_class_weights(weighted: DataFrame, feats: DataFrame) -> DataFrame:
     )
 
 
-def uniform_class_weights(
+def stump_class_weights(weighted: DataFrame, feats: DataFrame) -> DataFrame:
+    """A3+A4: for every candidate cut (feature, threshold=observed value) and
+    class, the Schapire-Singer weight masses W_+ / W_-.
+
+    Pipeline: join exploded features with the weighted long frame on id
+    (m*d x K rows), pre-aggregate to (feature, value, class) — the map-side
+    combine that keeps the window small — then one cumulative-sum window per
+    (feature, class) ordered by value.
+    """
+    return _class_weights(_weight_sums(feats.join(weighted, "id")))
+
+
+def _uniform_rows(
     emb: DataFrame, num_features: int, num_classes: int, m: int
 ) -> DataFrame:
-    """A3+A4 for ROUND ONE (uniform weights): the weighted long frame is a
-    pure function of the scan, so the feats-x-weights join of
-    :func:`stump_class_weights` fuses away — one pass over the source
-    explodes (feature, class) pairs directly, saving both join shuffles.
-    The training loop keeps the join because its weights evolve; this is
-    the plan you want wherever weights are derivable (first round,
-    re-initialization, uniform-importance scoring). Numbers are identical
-    to the join formulation."""
-    base = (
+    """(feature, value, class, y, weight) rows under the uniform D_1 =
+    1/(mK), built in one pass over the single-label source: features and
+    classes explode from the same row, so no feats-x-weights join."""
+    return (
         emb.select(
             F.col("vec_id").alias("id"),
             "label",
@@ -168,32 +177,19 @@ def uniform_class_weights(
             F.lit(1.0 / (m * num_classes)).alias("weight"),
         )
     )
-    grouped = base.groupBy("feature", "value", "class").agg(
-        F.sum(F.when(F.col("y") == 1, F.col("weight")).otherwise(0.0)).alias("swp"),
-        F.sum(F.when(F.col("y") == -1, F.col("weight")).otherwise(0.0)).alias("swm"),
-    )
-    w_cum = (
-        Window.partitionBy("feature", "class")
-        .orderBy("value")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    w_tot = Window.partitionBy("feature", "class")
-    cum = grouped.select(
-        "feature",
-        F.col("value").alias("threshold"),
-        "class",
-        F.sum("swp").over(w_cum).alias("p_plus"),
-        F.sum("swm").over(w_cum).alias("p_minus"),
-        F.sum("swp").over(w_tot).alias("t_plus"),
-        F.sum("swm").over(w_tot).alias("t_minus"),
-    )
-    return cum.select(
-        "feature",
-        "threshold",
-        "class",
-        (F.col("t_plus") - F.col("p_plus") + F.col("p_minus")).alias("w_plus"),
-        (F.col("t_minus") - F.col("p_minus") + F.col("p_plus")).alias("w_minus"),
-    )
+
+
+def uniform_class_weights(
+    emb: DataFrame, num_features: int, num_classes: int, m: int
+) -> DataFrame:
+    """A3+A4 for ROUND ONE (uniform weights): the weighted long frame is a
+    pure function of the scan, so the feats-x-weights join of
+    :func:`stump_class_weights` fuses away — one pass over the source
+    explodes (feature, class) pairs directly, saving both join shuffles.
+    The training loop keeps the join because its weights evolve; this is
+    the plan for the first-round search (q_a5/q_a6).  Numbers are identical
+    to the join formulation."""
+    return _class_weights(_weight_sums(_uniform_rows(emb, num_features, num_classes, m)))
 
 
 def stump_class_weights_salted(
@@ -214,18 +210,10 @@ def stump_class_weights_salted(
     prefix; equality with the unsalted operator is oracle-checked
     (q_a4_prefix_weights_salted shares q_a4's DuckDB SQL).
     """
-    joined = feats.join(weighted, "id")
     # monotone range bucketing: embedding values are O(1); floor(v*B/4)
     # spreads them over ~2B buckets while preserving value order
     bucket = F.floor(F.col("value") * (n_buckets / 4.0))
-    grouped = (
-        joined.withColumn("bucket", bucket)
-        .groupBy("feature", "class", "bucket", "value")
-        .agg(
-            F.sum(F.when(F.col("y") == 1, F.col("weight")).otherwise(0.0)).alias("swp"),
-            F.sum(F.when(F.col("y") == -1, F.col("weight")).otherwise(0.0)).alias("swm"),
-        )
-    )
+    grouped = _weight_sums(feats.join(weighted, "id")).withColumn("bucket", bucket)
     bucket_tot = grouped.groupBy("feature", "class", "bucket").agg(
         F.sum("swp").alias("bp"), F.sum("swm").alias("bm")
     )
@@ -246,25 +234,12 @@ def stump_class_weights_salted(
         .orderBy("value")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    w_tot = Window.partitionBy("feature", "class")
-    cum = (
-        grouped.join(offsets, ["feature", "class", "bucket"])
-        .select(
-            "feature",
-            F.col("value").alias("threshold"),
-            "class",
-            (F.col("off_p") + F.sum("swp").over(w_in)).alias("p_plus"),
-            (F.col("off_m") + F.sum("swm").over(w_in)).alias("p_minus"),
-            F.sum("swp").over(w_tot).alias("t_plus"),
-            F.sum("swm").over(w_tot).alias("t_minus"),
-        )
-    )
-    return cum.select(
-        "feature",
-        "threshold",
-        "class",
-        (F.col("t_plus") - F.col("p_plus") + F.col("p_minus")).alias("w_plus"),
-        (F.col("t_minus") - F.col("p_minus") + F.col("p_plus")).alias("w_minus"),
+    return _class_weights(
+        grouped.join(offsets, ["feature", "class", "bucket"]),
+        prefix=(
+            F.col("off_p") + F.sum("swp").over(w_in),
+            F.col("off_m") + F.sum("swm").over(w_in),
+        ),
     )
 
 
@@ -426,14 +401,9 @@ def train(
     pushed-down filter instead of a sampled-id broadcast join.  Mutually
     exclusive with ``sample_fraction`` (predicate wins if both are set).
     """
-    if label_set_col is not None:
-        emb = emb.select(
-            "vec_id", "embedding", F.col(label_set_col).alias("labels")
-        ).persist()
-        mlp = mlp_long_multi(emb, num_classes)
-    else:
-        emb = emb.select("vec_id", "embedding", "label").persist()
-        mlp = mlp_long(emb, num_classes)
+    label = "label" if label_set_col is None else F.col(label_set_col).alias("labels")
+    emb = emb.select("vec_id", "embedding", label).persist()
+    mlp = mlp_long(emb, num_classes)
     m = emb.count()
     feats = explode_features(emb).persist()
     weighted = init_weights(mlp, m, num_classes)

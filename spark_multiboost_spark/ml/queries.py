@@ -72,6 +72,15 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_tables(spark, sf_dir)["embeddings"]
 
 
+def _labelsets(emb: DataFrame) -> DataFrame:
+    """TRUE multi-label targets: every example carries its primary label,
+    even vec_ids additionally carry (label+3) mod K (-1 = no second label)
+    — the deterministic stand-in for the reference's Y ⊆ {0..K-1} label
+    SETS, mirrored by the multi-label oracles' ``labelsets`` CTE."""
+    second = F.when(F.col("vec_id") % 2 == 0, (F.col("label") + 3) % K).otherwise(-1)
+    return emb.select("vec_id", F.array("label", second).alias("labels"))
+
+
 def _weighted_uniform(emb: DataFrame) -> tuple[DataFrame, int]:
     m = emb.count()
     return (
@@ -166,16 +175,7 @@ def prefix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = _emb(spark, sf_dir)
     weighted, _m = _weighted_uniform(emb)
     feats = boosting.explode_features(emb).filter(F.col("feature") == 1)
-    from pyspark.sql import Window
-
-    grouped = (
-        feats.join(weighted, "id")
-        .groupBy("value", "class")
-        .agg(
-            F.sum(F.when(F.col("y") == 1, F.col("weight")).otherwise(0.0)).alias("swp"),
-            F.sum(F.when(F.col("y") == -1, F.col("weight")).otherwise(0.0)).alias("swm"),
-        )
-    )
+    grouped = boosting._weight_sums(feats.join(weighted, "id"))
     w_cum = (
         Window.partitionBy("class")
         .orderBy("value")
@@ -862,15 +862,11 @@ def sparse_stump_z(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("id", F.explode("smap").alias("feature", "value"))
         .filter(F.col("feature") <= 4)
     )
-    obs = sp.join(weighted, "id").groupBy("feature", "value", "class").agg(
-        F.sum(F.when(F.col("y") == 1, F.col("weight")).otherwise(0.0)).alias("swp"),
-        F.sum(F.when(F.col("y") == -1, F.col("weight")).otherwise(0.0)).alias("swm"),
-    )
+    obs = boosting._weight_sums(sp.join(weighted, "id"))
     # implicit-zero mass: class totals are feature-independent (tiny agg),
     # observed mass per (feature, class) subtracts off
-    totals = weighted.groupBy("class").agg(
-        F.sum(F.when(F.col("y") == 1, F.col("weight")).otherwise(0.0)).alias("tp"),
-        F.sum(F.when(F.col("y") == -1, F.col("weight")).otherwise(0.0)).alias("tm"),
+    totals = boosting._weight_sums(weighted, ("class",)).select(
+        "class", F.col("swp").alias("tp"), F.col("swm").alias("tm")
     )
     obs_tot = obs.groupBy("feature", "class").agg(
         F.sum("swp").alias("op"), F.sum("swm").alias("om")
@@ -887,29 +883,7 @@ def sparse_stump_z(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("tm") - F.coalesce(F.col("om"), F.lit(0.0))).alias("swm"),
         )
     )
-    grouped = obs.unionByName(zero)
-    w_cum = (
-        Window.partitionBy("feature", "class")
-        .orderBy("value")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    w_tot = Window.partitionBy("feature", "class")
-    cum = grouped.select(
-        "feature",
-        F.col("value").alias("threshold"),
-        "class",
-        F.sum("swp").over(w_cum).alias("p_plus"),
-        F.sum("swm").over(w_cum).alias("p_minus"),
-        F.sum("swp").over(w_tot).alias("t_plus"),
-        F.sum("swm").over(w_tot).alias("t_minus"),
-    )
-    cw = cum.select(
-        "feature",
-        "threshold",
-        "class",
-        (F.col("t_plus") - F.col("p_plus") + F.col("p_minus")).alias("w_plus"),
-        (F.col("t_minus") - F.col("p_minus") + F.col("p_plus")).alias("w_minus"),
-    )
+    cw = boosting._class_weights(obs.unionByName(zero))
     return boosting.stump_z(cw).select(
         "feature", "threshold", F.round("z", 9).alias("z")
     )
@@ -972,25 +946,7 @@ def abstain_stump_z(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle versus plain A5; both engines agree on inclusive range-frame
     boundaries (verified, see tests)."""
     emb = _emb(spark, sf_dir)
-    m = emb.count()
-    weight = 1.0 / (m * K)
-    base = (
-        emb.select(
-            F.col("vec_id").alias("id"),
-            "label",
-            F.posexplode(F.slice("embedding", 1, 4)).alias("f0", "value"),
-        )
-        .select("id", "label", (F.col("f0") + 1).alias("feature"), "value")
-        .crossJoin(spark.range(K).select(F.col("id").cast("int").alias("class")))
-    )
-    grouped = base.groupBy("feature", "value", "class").agg(
-        F.sum(
-            F.when(F.col("class") == F.col("label"), F.lit(weight)).otherwise(0.0)
-        ).alias("swp"),
-        F.sum(
-            F.when(F.col("class") != F.col("label"), F.lit(weight)).otherwise(0.0)
-        ).alias("swm"),
-    )
+    grouped = boosting._weight_sums(boosting._uniform_rows(emb, 4, K, emb.count()))
     d = ABSTAIN_DELTA
     frame = "PARTITION BY feature, class ORDER BY value"
     cum = grouped.select(
@@ -1173,27 +1129,7 @@ def multilabel_weight_init(spark: SparkSession, sf_dir: str) -> DataFrame:
     Plan: the lift is a map-side explode over the broadcast class range;
     one window partitioned by id for the set-size audit."""
     emb = _emb(spark, sf_dir)
-    ls = emb.select(
-        "vec_id",
-        F.col("label").alias("l1"),
-        F.when(F.col("vec_id") % 2 == 0, (F.col("label") + 3) % K)
-        .otherwise(-1)
-        .alias("l2"),
-    )
-    mlp = ls.select(
-        F.col("vec_id").alias("id"),
-        F.explode(F.sequence(F.lit(0), F.lit(K - 1))).alias("class"),
-        "l1",
-        "l2",
-    ).select(
-        "id",
-        "class",
-        F.when(
-            (F.col("class") == F.col("l1")) | (F.col("class") == F.col("l2")), 1
-        )
-        .otherwise(-1)
-        .alias("y"),
-    )
+    mlp = boosting.mlp_long(_labelsets(emb), K)
     m = emb.count()
     w = Window.partitionBy("id")
     return (
@@ -1266,27 +1202,7 @@ def multilabel_stump_z(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same plan shape as A5: one (feature,class)-partitioned prefix window
     over the pre-aggregated candidate weights."""
     emb = _emb(spark, sf_dir)
-    ls = emb.select(
-        "vec_id",
-        F.col("label").alias("l1"),
-        F.when(F.col("vec_id") % 2 == 0, (F.col("label") + 3) % K)
-        .otherwise(-1)
-        .alias("l2"),
-    )
-    mlp = ls.select(
-        F.col("vec_id").alias("id"),
-        F.explode(F.sequence(F.lit(0), F.lit(K - 1))).alias("class"),
-        "l1",
-        "l2",
-    ).select(
-        "id",
-        "class",
-        F.when(
-            (F.col("class") == F.col("l1")) | (F.col("class") == F.col("l2")), 1
-        )
-        .otherwise(-1)
-        .alias("y"),
-    )
+    mlp = boosting.mlp_long(_labelsets(emb), K)
     weighted = boosting.init_weights(mlp, emb.count(), K)
     feats = boosting.explode_features(emb).filter(F.col("feature") <= 4)
     cw = boosting.stump_class_weights(weighted, feats)

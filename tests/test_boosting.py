@@ -189,7 +189,7 @@ def test_multilabel_training_learns_separable_sets(spark):
         spark, emb, num_rounds=6, num_classes=6, label_set_col="labels"
     )
     scored = boosting.score_model(emb, boosting.stumps_to_df(spark, stumps))
-    mlp = boosting.mlp_long_multi(emb, 6)
+    mlp = boosting.mlp_long(emb, 6)
     loss = boosting.hamming_loss(scored, mlp).collect()[0]["hamming_loss"]
     assert loss < 2.0 / 6 / 2  # far below the all-negative baseline
 

@@ -491,3 +491,39 @@ def test_budget_waterfill_level_is_maximal(spark, sf_dir):
         )
     # per-lang quota never exceeds supply
     assert all(quota[lang] <= cnt[lang] for lang in cnt)
+
+
+def test_docpipe_kept_avg_rounds_like_oracle_on_half_tie(spark, sf_dir, tmp_path):
+    """kept_avg_token_len on an exact half tie: six kept 30-token docs with
+    n_chars 227, 230, 255, 298, 339 and 369 have per-doc averages summing
+    to 57.266667, a mean of exactly 9.5444445.  The oracle's double ROUND
+    gives 9.544445; Spark's ROUND of the same double quotient gives
+    9.544444, so the query has to round the way the oracle does."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from spark_multiboost_spark.session import TABLES
+    from tests.harness import compare
+
+    for t in TABLES:
+        shutil.copy(f"{sf_dir}/{t}.parquet", tmp_path / f"{t}.parquet")
+    docs = pq.read_table(tmp_path / "documents.parquet")
+    n_chars = [227, 230, 255, 298, 339, 369]
+    first = max(docs.column("doc_id").to_pylist()) + 1
+    tie = pa.table(
+        {
+            "doc_id": [first + j for j in range(len(n_chars))],
+            "text": [" ".join(f"t{j}w{i}" for i in range(30)) for j in range(len(n_chars))],
+            "lang": ["xx"] * len(n_chars),
+            "source": ["src0"] * len(n_chars),
+            "n_chars": n_chars,
+        },
+        schema=docs.schema,
+    )
+    pq.write_table(pa.concat_tables([docs, tie]), tmp_path / "documents.parquet")
+
+    rows = _Q["q_comp_docpipe"].fn(spark, str(tmp_path)).filter("lang = 'xx'").collect()
+    assert [(r["n_docs"], r["kept_avg_token_len"]) for r in rows] == [(6, 9.544445)]
+    compare(spark, "q_comp_docpipe", str(tmp_path))

@@ -571,10 +571,12 @@ def test_pruned_lm_single_holdout_pass(spark, sf_dir):
     with the cutoffs as conditional-sum COLUMNS over that single stream
     (r14: no x|cutoffs| row replication through a thresholds cross-join),
     and the holdout documents scan must appear at most once."""
+    from spark_multiboost_spark.functions import retrieval
+
     plan = _plan(spark, "q_d5_pruned_trigram_lm", sf_dir)
     assert "CartesianProduct" not in plan
     # one per-cutoff decimal sum column per threshold, all in ONE aggregate
-    for t in (1, 2, 3, 5):
+    for t in retrieval.PRUNE_MINCOUNTS:
         assert f"s_{t}#" in plan, f"missing conditional-sum column s_{t}"
     scans = [
         ln

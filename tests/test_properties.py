@@ -5,7 +5,8 @@ correctness story leans on:
    the same sum at ANY partitioning (this is what makes results
    reproducible on a cluster);
 2. the salted two-stage prefix-sum equals the global prefix-sum on
-   arbitrary weighted frames (not just the fixtures);
+   arbitrary weighted frames (not just the fixtures), and the fused
+   round-one search equals the join formulation on arbitrary tables;
 3. the blocked-matmul scorer's strict left-to-right accumulation is
    bit-identical to a scalar sequential loop (the DuckDB/Catalyst fold).
 """
@@ -83,6 +84,42 @@ def test_salted_prefix_equals_global(spark, data):
     plain = norm(boosting.stump_class_weights(weighted, feats))
     salted = norm(boosting.stump_class_weights_salted(weighted, feats, n_buckets=3))
     assert plain == salted
+
+
+@settings(max_examples=6, deadline=None)
+@given(
+    data=st.data(),
+    m=st.integers(1, 8),
+    d=st.integers(1, 4),
+    k=st.integers(2, 4),
+)
+def test_fused_uniform_search_equals_join(spark, data, m, d, k):
+    """uniform_class_weights (round one, no feats-x-weights join) must give
+    the same W_+ / W_- as stump_class_weights over the uniform long frame,
+    on tables whose values repeat within and across features."""
+    from spark_multiboost_spark.ml import boosting
+
+    n_feats = data.draw(st.integers(1, d), label="num_features")
+    value = st.sampled_from([-1.0, -0.25, 0.0, 0.5, 2.0])
+    rows = [
+        (i, data.draw(st.lists(value, min_size=d, max_size=d)),
+         data.draw(st.integers(0, k - 1)))
+        for i in range(m)
+    ]
+    emb = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>, label int")
+
+    def norm(df):
+        return sorted(
+            (r["feature"], r["threshold"], r["class"],
+             round(r["w_plus"], 9), round(r["w_minus"], 9))
+            for r in df.collect()
+        )
+
+    fused = norm(boosting.uniform_class_weights(emb, n_feats, k, m))
+    weighted = boosting.init_weights(boosting.mlp_long(emb, k), m, k)
+    feats = boosting.explode_features(emb).filter(F.col("feature") <= n_feats)
+    joined = norm(boosting.stump_class_weights(weighted, feats))
+    assert fused == joined
 
 
 @settings(max_examples=30, deadline=None)

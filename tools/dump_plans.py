@@ -8,16 +8,38 @@ Usage: python tools/dump_plans.py <tag> <suffix> [name ...]
 The optimization-round judge checks plan claims against these files
 (OPTIMIZATION_r13.md); regenerate the _after files whenever a benched
 query's body changes.
+
+Each file holds the optimized logical plan, then the formatted physical
+plan, with expression ids (``#123``, ``#45L``) and exchange plan ids
+stripped: two builds of the same query then diff to structural changes
+only (``diff plans/<tag>/<name>_before.txt plans/<tag>/<name>_after.txt``).
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+_RUN_IDS = re.compile(r"#\d+L?|(?<=\[plan_id=)\d+(?=\])")
+
+
+def strip_ids(plan: str) -> str:
+    """A plan string without its per-run expression and exchange ids."""
+    return _RUN_IDS.sub("", plan)
+
+
+def plan_text(df) -> str:
+    """Optimized logical plan + formatted physical plan, ids stripped."""
+    qe = df._jdf.queryExecution()
+    formatted = df.sparkSession._jvm.PythonSQLUtils.explainString(qe, "formatted")
+    return strip_ids(
+        f"== Optimized Logical Plan ==\n{qe.optimizedPlan().toString()}\n{formatted}"
+    )
 
 
 def main() -> None:
@@ -39,10 +61,7 @@ def main() -> None:
     for name in names:
         spark.sparkContext.setJobDescription(f"dump_plans: {name}")
         try:
-            df = qs[name](spark, SF_DIR)
-            plan = spark._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
-            )
+            plan = plan_text(qs[name](spark, SF_DIR))
         except Exception as e:  # noqa: BLE001 - record the failure in the file
             plan = f"ERROR building/explaining {name}: {e}"
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
