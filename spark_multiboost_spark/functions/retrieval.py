@@ -1114,7 +1114,7 @@ def pruned_trigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
             for t in PRUNE_MINCOUNTS
         ],
         F.count(F.lit(1)).alias("cnt"),
-    )
+    ).filter(F.col("cnt") > 0)  # an empty holdout half yields no rows, not NULL sums
     one = agg3.crossJoin(agg2).crossJoin(F.broadcast(aggq))
     rows = F.array(
         *[

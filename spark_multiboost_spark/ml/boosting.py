@@ -4,13 +4,15 @@
 Reference parity (all [R] citations reconstructed — the /root/reference
 mount was empty at survey time, SURVEY.md §0):
 - MultiLabeledPoint / WeightedMultiLabeledPoint
-  [R] .../multilabel/MultiLabeledPoint.scala -> long-form frame
-  (id, class, y, weight) + a separate exploded feature frame (id, feature,
-  value); SURVEY §1.2 chose the long form so every boosting step is a plain
-  relational op.
+  [R] .../multilabel/MultiLabeledPoint.scala -> the wide training state
+  (id, x ARRAY<DOUBLE>, y ARRAY<INT>[K], w ARRAY<DOUBLE>[K]): one row per
+  example carrying its features, its ±1 label vector and its row of the
+  m x K distribution D_t(i, l) (:func:`init_state`).  The long form
+  (id, class, y, weight) exists only at the edges (:func:`long_form`), for
+  queries that print it.
 - DecisionStumpAlgorithm.run [R] .../baselearners/DecisionStump.scala ->
-  :func:`stump_candidates` (A3) + prefix-sum threshold search (A4) +
-  Z-criterion scoring (A5) + argmin (A6).
+  :func:`search_rows` (A3 candidates) + prefix-sum threshold search (A4) +
+  Z-criterion scoring (A5) + argmin (A6), all in :func:`fit_stump`.
 - AdaBoostMHAlgorithm.run [R] .../stronglearners/AdaBoostMH.scala ->
   :func:`train` (A10): driver loop, weight update + normalization (A8),
   localCheckpoint per round (plan truncation — our analogue of the
@@ -25,20 +27,23 @@ Math (Schapire & Singer 1999, BoosTexter 2000):
   Z(j,theta) = 2 sum_l sqrt(W_+^l W_-^l)   (minimized over candidates)
   weight update: w' = w exp(-y v_l phi(x)) / Z_norm
 
-One search kernel: every stump search in the package — the training loop
-(:func:`stump_class_weights`), the fused round-one plan
-(:func:`uniform_class_weights`), the salted variant and the sparse / prefix /
-abstaining A4-A5 queries — runs the same two steps, :func:`_weight_sums`
-(pre-aggregate weights by (feature, value, class)) then
-:func:`_class_weights` (per-(feature, class) prefix and total windows, then
-the W_+ / W_- projection).  One label lift, :func:`mlp_long`, serves single
-labels and label sets alike.
+One search kernel: every stump search in the package — the training loop,
+the round-one queries, the salted variant and the sparse / prefix /
+abstaining A4-A5 queries — runs the same two steps over (feature, value,
+class, y, weight) rows, :func:`_weight_sums` (pre-aggregate weights by
+(feature, value, class)) then :func:`_class_weights` (per-(feature, class)
+prefix and total windows, then the W_+ / W_- projection).  The rows are
+exploded map-side from the state, features then classes of one example
+row, so no search joins features with weights.  One label lift,
+:func:`_label_vector`, serves single labels and label sets alike.
 
 Scale posture (SURVEY §4.2): the candidate search pre-aggregates weights by
 (feature, value, class) BEFORE the window prefix-sum, so the window input is
 |distinct values| x K per feature, not m x K; the per-feature window is the
-d-way shuffle documented for salting at extreme scale. Feature indices are
-1-based everywhere (matches SQL element_at/list indexing in both engines).
+d-way shuffle documented for salting at extreme scale.  A training round
+shuffles only the search's three exchanges and the weight update's 1-row
+normalizer.  Feature indices are 1-based everywhere (matches SQL
+element_at/list indexing in both engines).
 """
 
 from __future__ import annotations
@@ -61,29 +66,49 @@ class Stump:
     votes: list[float]  # length K; h(x)[l] = votes[l] * phi(x)
 
 
-def mlp_long(emb: DataFrame, num_classes: int = 10) -> DataFrame:
-    """The AdaBoost.MH label lift to the long form (id, class, y in
-    {+1,-1}) — FIXTURES.md §2.1: y[i, l] = +1 iff l ∈ labels_i.  Reads the
-    ARRAY<INT> label set ``labels`` (BoosTexter label SETS, the reference's
-    core use case) when ``emb`` has one, else the single ``label`` as the
+def _label_vector(emb: DataFrame, num_classes: int) -> Column:
+    """The AdaBoost.MH label lift — FIXTURES.md §2.1: y[l] = +1 iff
+    l ∈ labels, else -1, as a length-K ARRAY<INT>.  Reads the ARRAY<INT>
+    label set ``labels`` (BoosTexter label SETS, the reference's core use
+    case) when ``emb`` has one, else the single ``label`` as the
     |labels| = 1 case."""
     labels = F.col("labels") if "labels" in emb.columns else F.array("label")
-    return emb.select(
-        F.col("vec_id").alias("id"),
-        F.explode(F.sequence(F.lit(0), F.lit(num_classes - 1))).alias("class"),
-        labels.alias("labels"),
-    ).select(
-        "id",
-        "class",
-        F.when(F.array_contains("labels", F.col("class")), 1)
-        .otherwise(-1)
-        .alias("y"),
+    return F.transform(
+        F.sequence(F.lit(0), F.lit(num_classes - 1)),
+        lambda c: F.when(F.array_contains(labels, c), 1).otherwise(-1),
     )
 
 
-def init_weights(mlp: DataFrame, m: int, num_classes: int) -> DataFrame:
-    """A2: uniform initial distribution D_1(i,l) = 1/(mK)."""
-    return mlp.withColumn("weight", F.lit(1.0 / (m * num_classes)))
+def mlp_long(emb: DataFrame, num_classes: int = 10) -> DataFrame:
+    """The label lift in long form (id, class, y in {+1,-1})."""
+    return emb.select(
+        F.col("vec_id").alias("id"),
+        F.posexplode(_label_vector(emb, num_classes)).alias("class", "y"),
+    )
+
+
+def init_state(emb: DataFrame, m: int, num_classes: int) -> DataFrame:
+    """A2: the wide training state (id, x, y, w) of ``emb`` (vec_id,
+    embedding, label | labels) under the uniform D_1(i,l) = 1/(mK)."""
+    return emb.select(
+        F.col("vec_id").alias("id"),
+        F.col("embedding").alias("x"),
+        _label_vector(emb, num_classes).alias("y"),
+        F.array_repeat(F.lit(1.0 / (m * num_classes)), num_classes).alias("w"),
+    )
+
+
+def _class_rows(df: DataFrame, *keys: str) -> DataFrame:
+    """``keys`` + (class, y, weight): one row per class of each row's y / w
+    vectors, exploded map-side."""
+    return df.select(
+        *keys, F.posexplode(F.arrays_zip("y", "w")).alias("class", "yw")
+    ).select(*keys, "class", F.col("yw.y").alias("y"), F.col("yw.w").alias("weight"))
+
+
+def long_form(state: DataFrame) -> DataFrame:
+    """The state's distribution as (id, class, y, weight) rows."""
+    return _class_rows(state, "id")
 
 
 def explode_features(emb: DataFrame) -> DataFrame:
@@ -91,6 +116,18 @@ def explode_features(emb: DataFrame) -> DataFrame:
     return emb.select(
         F.col("vec_id").alias("id"), F.posexplode("embedding").alias("feature", "value")
     ).withColumn("feature", F.col("feature") + 1)
+
+
+def search_rows(state: DataFrame, num_features: int | None = None) -> DataFrame:
+    """The stump search's (feature, value, class, y, weight) rows: the
+    features, then the classes, of each state row, exploded map-side — no
+    features-x-weights join.  ``num_features`` slices x to its first
+    features before the explode."""
+    x = F.col("x") if num_features is None else F.slice("x", 1, num_features)
+    feats = state.select(F.posexplode(x).alias("f0", "value"), "y", "w")
+    return _class_rows(
+        feats.withColumn("feature", F.col("f0") + 1), "feature", "value"
+    )
 
 
 def _weight_sums(
@@ -138,63 +175,13 @@ def _class_weights(
     )
 
 
-def stump_class_weights(weighted: DataFrame, feats: DataFrame) -> DataFrame:
+def stump_class_weights(state: DataFrame, num_features: int | None = None) -> DataFrame:
     """A3+A4: for every candidate cut (feature, threshold=observed value) and
-    class, the Schapire-Singer weight masses W_+ / W_-.
-
-    Pipeline: join exploded features with the weighted long frame on id
-    (m*d x K rows), pre-aggregate to (feature, value, class) — the map-side
-    combine that keeps the window small — then one cumulative-sum window per
-    (feature, class) ordered by value.
-    """
-    return _class_weights(_weight_sums(feats.join(weighted, "id")))
+    class, the Schapire-Singer weight masses W_+ / W_- of the state."""
+    return _class_weights(_weight_sums(search_rows(state, num_features)))
 
 
-def _uniform_rows(
-    emb: DataFrame, num_features: int, num_classes: int, m: int
-) -> DataFrame:
-    """(feature, value, class, y, weight) rows under the uniform D_1 =
-    1/(mK), built in one pass over the single-label source: features and
-    classes explode from the same row, so no feats-x-weights join."""
-    return (
-        emb.select(
-            F.col("vec_id").alias("id"),
-            "label",
-            F.posexplode(F.slice("embedding", 1, num_features)).alias("f0", "value"),
-        )
-        .select(
-            "id",
-            "label",
-            (F.col("f0") + 1).alias("feature"),
-            "value",
-            F.explode(F.sequence(F.lit(0), F.lit(num_classes - 1))).alias("class"),
-        )
-        .select(
-            "feature",
-            "value",
-            "class",
-            F.when(F.col("class") == F.col("label"), 1).otherwise(-1).alias("y"),
-            F.lit(1.0 / (m * num_classes)).alias("weight"),
-        )
-    )
-
-
-def uniform_class_weights(
-    emb: DataFrame, num_features: int, num_classes: int, m: int
-) -> DataFrame:
-    """A3+A4 for ROUND ONE (uniform weights): the weighted long frame is a
-    pure function of the scan, so the feats-x-weights join of
-    :func:`stump_class_weights` fuses away — one pass over the source
-    explodes (feature, class) pairs directly, saving both join shuffles.
-    The training loop keeps the join because its weights evolve; this is
-    the plan for the first-round search (q_a5/q_a6).  Numbers are identical
-    to the join formulation."""
-    return _class_weights(_weight_sums(_uniform_rows(emb, num_features, num_classes, m)))
-
-
-def stump_class_weights_salted(
-    weighted: DataFrame, feats: DataFrame, n_buckets: int = 8
-) -> DataFrame:
+def stump_class_weights_salted(rows: DataFrame, n_buckets: int = 8) -> DataFrame:
     """A4 at extreme scale (SURVEY §4.2 item 2): the per-(feature, class)
     prefix-sum window above puts ALL of a feature's rows in one window
     partition — the skew wall when one feature has ~m distinct values and m
@@ -213,7 +200,7 @@ def stump_class_weights_salted(
     # monotone range bucketing: embedding values are O(1); floor(v*B/4)
     # spreads them over ~2B buckets while preserving value order
     bucket = F.floor(F.col("value") * (n_buckets / 4.0))
-    grouped = _weight_sums(feats.join(weighted, "id")).withColumn("bucket", bucket)
+    grouped = _weight_sums(rows).withColumn("bucket", bucket)
     bucket_tot = grouped.groupBy("feature", "class", "bucket").agg(
         F.sum("swp").alias("bp"), F.sum("swm").alias("bm")
     )
@@ -250,10 +237,12 @@ def stump_z(class_weights: DataFrame) -> DataFrame:
     )
 
 
-def best_stump_row(zs: DataFrame) -> DataFrame:
+def best_stump_row(zs: DataFrame, n: int = 1) -> DataFrame:
     """A6: global argmin of Z, deterministic tiebreak (z, feature,
-    threshold).  The ranking key quantizes z to 1e-9 (floor(z·1e9 + 0.5),
-    mirrored in every SQL oracle): EXACT z ties are possible — e.g. the
+    threshold).  With ``n`` = K over a frame of per-class rows, the argmin
+    candidate's K rows (every candidate has exactly K, all with the same
+    z).  The ranking key quantizes z to 1e-9
+    (floor(z·1e9 + 0.5), mirrored in every SQL oracle): EXACT z ties are possible — e.g. the
     degenerate max-threshold cut (a constant hypothesis) has identical z on
     every feature, and the multi-label fixture makes it the argmin — and a
     raw-double rank would then hang the cross-engine choice on ~1e-16
@@ -273,48 +262,62 @@ def best_stump_row(zs: DataFrame) -> DataFrame:
     measured gaps but costs genuine sub-1e-6 distinctions on unseen data
     — 1e-9 is the chosen trade, not a guarantee."""
     zq = F.floor(F.col("z") * 1e9 + 0.5)
-    return zs.orderBy(zq, "feature", "threshold").limit(1)
+    return zs.orderBy(zq, "feature", "threshold").limit(n)
+
+
+def _stump_rows(
+    state: DataFrame, m: int, num_classes: int, feature_pred: Column | None = None
+) -> DataFrame:
+    """The search plan of :func:`fit_stump`: the argmin candidate's K rows
+    (feature, threshold, class, z, v).  Z is a window sum over each
+    candidate's K class rows, so the argmin's rows carry every vote."""
+    rows = search_rows(state)
+    if feature_pred is not None:
+        rows = rows.filter(feature_pred)
+    eps = 1.0 / (2.0 * m * num_classes)
+    # class order fixes the summation order, so z is bit-reproducible
+    per_cut = (
+        Window.partitionBy("feature", "threshold")
+        .orderBy("class")
+        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    )
+    root = F.sqrt(F.col("w_plus") * F.col("w_minus"))
+    per_class = _class_weights(_weight_sums(rows)).select(
+        "feature",
+        "threshold",
+        "class",
+        (2.0 * F.sum(root).over(per_cut)).alias("z"),
+        (
+            0.5
+            * F.log((F.col("w_plus") + F.lit(eps)) / (F.col("w_minus") + F.lit(eps)))
+        ).alias("v"),
+    )
+    return best_stump_row(per_class, num_classes)
 
 
 def fit_stump(
-    weighted: DataFrame, feats: DataFrame, m: int, num_classes: int, t: int = 0
+    state: DataFrame,
+    m: int,
+    num_classes: int,
+    t: int = 0,
+    feature_pred: Column | None = None,
 ) -> Stump:
     """A3-A6 (reference: DecisionStumpAlgorithm.run [R]): find the best cut
-    and its confidence-rated votes.
+    of the state and its confidence-rated votes.  ``feature_pred`` is a
+    boolean Column over ``feature`` restricting the searched features.
 
-    ONE driver action per stump search: the argmin row is broadcast-joined
-    back onto the class-weight frame, so (feature, threshold, z) and all K
+    ONE driver action per stump search: (feature, threshold, z) and all K
     votes arrive in a single K-row collect. On a cluster every action is a
     job launch — per-round latency is action-count-bound, not data-bound,
     at the reference's data sizes."""
-    cw = stump_class_weights(weighted, feats)
-    best = best_stump_row(stump_z(cw))
-    eps = 1.0 / (2.0 * m * num_classes)
-    rows = (
-        cw.join(F.broadcast(best), ["feature", "threshold"])
-        .select(
-            "feature",
-            "threshold",
-            "z",
-            "class",
-            (
-                0.5
-                * F.log(
-                    (F.col("w_plus") + F.lit(eps)) / (F.col("w_minus") + F.lit(eps))
-                )
-            ).alias("v"),
-        )
-        .collect()  # bounded: K rows — one per class (model-sized)
-    )
-    votes = [0.0] * num_classes
-    for r in rows:
-        votes[r["class"]] = r["v"]
+    rows = _stump_rows(state, m, num_classes, feature_pred).collect()  # bounded: K rows
+    rows.sort(key=lambda r: r["class"])
     return Stump(
         t=t,
         feature=int(rows[0]["feature"]),
         threshold=float(rows[0]["threshold"]),
         z=float(rows[0]["z"]),
-        votes=votes,
+        votes=[r["v"] for r in rows],
     )
 
 
@@ -340,34 +343,31 @@ def stumps_to_df(spark: SparkSession, stumps: list[Stump]) -> DataFrame:
     )
 
 
-def update_weights(
-    weighted: DataFrame, feats: DataFrame, stump: Stump, spark: SparkSession
-) -> DataFrame:
-    """A8: w' = w exp(-y v_l phi(x)) / Z_norm, Z_norm a global scalar agg
-    (the reference's per-round action boundary [R] AdaBoostMHAlgorithm.run)."""
-    phi = feats.filter(F.col("feature") == stump.feature).select(
+def update_weights(state: DataFrame, stump: Stump) -> DataFrame:
+    """A8: w' = w exp(-y v_l phi(x)) / Z_norm — a map over the m state
+    rows, Z_norm a global scalar agg (the reference's per-round action
+    boundary [R] AdaBoostMHAlgorithm.run)."""
+    above = F.element_at("x", stump.feature) > stump.threshold
+    phi = F.when(above, 1.0).otherwise(-1.0)
+    votes = F.array(*[F.lit(v) for v in stump.votes])
+    raw = state.select(
         "id",
-        F.when(F.col("value") > stump.threshold, 1.0).otherwise(-1.0).alias("phi"),
-    )
-    votes_arr = F.array(*[F.lit(v) for v in stump.votes])
-    unnorm = (
-        weighted.join(phi, "id")
-        .withColumn(
-            "w_raw",
-            F.col("weight")
-            * F.exp(
-                -F.col("y")
-                * F.element_at(votes_arr, F.col("class") + 1)
-                * F.col("phi")
-            ),
-        )
+        "x",
+        "y",
+        F.transform(
+            "w",
+            lambda w, l: w
+            * F.exp(-F.element_at("y", l + 1) * F.element_at(votes, l + 1) * phi),
+        ).alias("w"),
     )
     # Z_norm stays IN the plan as a broadcast scalar (no driver action):
     # the reference pulls it to the driver per round [R]; we let the
     # following eager localCheckpoint materialize everything in one job
-    z_norm = unnorm.agg(F.sum("w_raw").alias("z_norm"))
-    return unnorm.crossJoin(F.broadcast(z_norm)).select(
-        "id", "class", "y", (F.col("w_raw") / F.col("z_norm")).alias("weight")
+    z_norm = raw.agg(
+        F.sum(F.aggregate("w", F.lit(0.0), lambda acc, w: acc + w)).alias("z_norm")
+    )
+    return raw.crossJoin(F.broadcast(z_norm)).select(
+        "id", "x", "y", F.transform("w", lambda w: w / F.col("z_norm")).alias("w")
     )
 
 
@@ -384,60 +384,51 @@ def train(
 ) -> list[Stump]:
     """A10 (reference: AdaBoostMHAlgorithm.run [R]): the boosting loop.
 
-    Driver-orchestrated like the reference, but all state lives in
-    DataFrames; localCheckpoint per round truncates both RDD lineage and the
-    Catalyst plan (SURVEY §4.2 item 1 — the one genuinely non-free part of
-    DataFrame-native boosting). A12: optional instance/feature subsampling
-    before each stump search.  ``label_set_col`` names an ARRAY<INT>
-    multi-label column (BoosTexter label sets); None = single-label
-    ``label``.
+    Driver-orchestrated like the reference, but all state lives in one
+    DataFrame, the wide state of :func:`init_state`; localCheckpoint per
+    round truncates both RDD lineage and the Catalyst plan (SURVEY §4.2
+    item 1 — the one genuinely non-free part of DataFrame-native boosting).
+    Each round calls :func:`fit_stump` and :func:`update_weights` once,
+    through the module (so wrappers installed on them see every round).
+    A12: optional instance/feature subsampling before each stump search.
+    ``label_set_col`` names an ARRAY<INT> multi-label column (BoosTexter
+    label sets); None = single-label ``label``.
 
     ``sample_pred`` (VERDICT r10 item 2) is the DETERMINISTIC instance
     sampler: a callable ``t -> boolean Column over 'id'`` applied as a plain
-    filter on the weighted frame before round t's stump search.  Unlike
-    ``sample_fraction`` (seeded RNG, engine-specific), a pure-arithmetic
-    predicate is expressible identically in SQL, making sampled training
-    exactly oracle-checkable — and it is also the better 100-TB shape: a
-    pushed-down filter instead of a sampled-id broadcast join.  Mutually
-    exclusive with ``sample_fraction`` (predicate wins if both are set).
+    filter on the state before round t's stump search.  Unlike
+    ``sample_fraction`` (a seeded per-partition Bernoulli sample of the
+    state, engine-specific), a pure-arithmetic predicate is expressible
+    identically in SQL, making sampled training exactly oracle-checkable.
+    Mutually exclusive with ``sample_fraction`` (predicate wins if both
+    are set).
     """
     label = "label" if label_set_col is None else F.col(label_set_col).alias("labels")
-    emb = emb.select("vec_id", "embedding", label).persist()
-    mlp = mlp_long(emb, num_classes)
+    emb = emb.select("vec_id", "embedding", label)
     m = emb.count()
-    feats = explode_features(emb).persist()
-    weighted = init_weights(mlp, m, num_classes)
-    weighted = weighted.localCheckpoint(eager=True)
+    state = init_state(emb, m, num_classes).localCheckpoint(eager=True)
 
     stumps: list[Stump] = []
     # loop-invariant: feature count never changes between rounds, so the
     # one action that computes it runs once, not once per round
     n_feats = (
-        feats.agg(F.max("feature")).collect()[0][0]  # bounded: 1-row max agg
+        state.agg(F.max(F.size("x"))).collect()[0][0]  # bounded: 1-row max agg
         if feature_fraction is not None
         else None
     )
     for t in range(num_rounds):
-        search_w, search_f = weighted, feats
+        search, feature_pred = state, None
         if sample_pred is not None:
-            search_w = weighted.filter(sample_pred(t))
+            search = state.filter(sample_pred(t))
         elif sample_fraction is not None:
-            ids = emb.select("vec_id").sample(sample_fraction, seed + t).select(
-                F.col("vec_id").alias("id")
-            )
-            search_w = weighted.join(F.broadcast(ids), "id")
+            search = state.sample(sample_fraction, seed + t)
         if feature_fraction is not None:
             keep = max(1, int(n_feats * feature_fraction))
             # deterministic per-round rotation of the feature subset
-            search_f = feats.filter(
-                ((F.col("feature") + t) % n_feats) < keep
-            )
-        stump = fit_stump(search_w, search_f, m, num_classes, t)
+            feature_pred = ((F.col("feature") + t) % n_feats) < keep
+        stump = fit_stump(search, m, num_classes, t, feature_pred)
         stumps.append(stump)
-        weighted = update_weights(weighted, feats, stump, spark)
-        weighted = weighted.localCheckpoint(eager=True)
-    feats.unpersist()
-    emb.unpersist()
+        state = update_weights(state, stump).localCheckpoint(eager=True)
     return stumps
 
 

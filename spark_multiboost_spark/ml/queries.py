@@ -78,15 +78,12 @@ def _labelsets(emb: DataFrame) -> DataFrame:
     — the deterministic stand-in for the reference's Y ⊆ {0..K-1} label
     SETS, mirrored by the multi-label oracles' ``labelsets`` CTE."""
     second = F.when(F.col("vec_id") % 2 == 0, (F.col("label") + 3) % K).otherwise(-1)
-    return emb.select("vec_id", F.array("label", second).alias("labels"))
+    return emb.select("vec_id", "embedding", F.array("label", second).alias("labels"))
 
 
-def _weighted_uniform(emb: DataFrame) -> tuple[DataFrame, int]:
+def _uniform_state(emb: DataFrame) -> tuple[DataFrame, int]:
     m = emb.count()
-    return (
-        boosting.init_weights(boosting.mlp_long(emb, K), m, K),
-        m,
-    )
+    return boosting.init_state(emb, m, K), m
 
 
 @query(
@@ -119,9 +116,11 @@ SELECT id, class, y, ROUND(weight, 9) AS weight FROM w
     group="A",
 )
 def weight_init(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A2: long-form lift + uniform D_1(i,l) = 1/(mK)."""
-    weighted, _m = _weighted_uniform(_emb(spark, sf_dir))
-    return weighted.select("id", "class", "y", F.round("weight", 9).alias("weight"))
+    """A2: label lift + uniform D_1(i,l) = 1/(mK), printed in long form."""
+    state, _m = _uniform_state(_emb(spark, sf_dir))
+    return boosting.long_form(state).select(
+        "id", "class", "y", F.round("weight", 9).alias("weight")
+    )
 
 
 @query(
@@ -172,10 +171,8 @@ FROM grouped
 def prefix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A4: per-feature sorted cumulative class-weight sums (shown for
     feature 1) — the one-pass threshold-search core."""
-    emb = _emb(spark, sf_dir)
-    weighted, _m = _weighted_uniform(emb)
-    feats = boosting.explode_features(emb).filter(F.col("feature") == 1)
-    grouped = boosting._weight_sums(feats.join(weighted, "id"))
+    state, _m = _uniform_state(_emb(spark, sf_dir))
+    grouped = boosting._weight_sums(boosting.search_rows(state, 1))
     w_cum = (
         Window.partitionBy("class")
         .orderBy("value")
@@ -222,10 +219,9 @@ def prefix_weights_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket offsets over a tiny frame + within-bucket prefix sums. The oracle
     is the UNSALTED global prefix-sum SQL: the whole point is that salting
     changes the shuffle shape, not the numbers."""
-    emb = _emb(spark, sf_dir)
-    weighted, _m = _weighted_uniform(emb)
-    feats = boosting.explode_features(emb).filter(F.col("feature") == 1)
-    cw = boosting.stump_class_weights_salted(weighted, feats, n_buckets=8)
+    state, _m = _uniform_state(_emb(spark, sf_dir))
+    rows = boosting.search_rows(state, 1)
+    cw = boosting.stump_class_weights_salted(rows, n_buckets=8)
     return cw.select(
         "feature",
         "threshold",
@@ -275,11 +271,10 @@ FROM cw GROUP BY feature, threshold
     group="A",
 )
 def stump_z_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A5: Z = 2 sum_l sqrt(W+ W-) per candidate (features 1-4 shown).
-    Round-one weights are uniform, so the fused no-join formulation applies
-    (boosting.uniform_class_weights) — same numbers, two fewer shuffles."""
-    emb = _emb(spark, sf_dir)
-    cw = boosting.uniform_class_weights(emb, 4, K, emb.count())
+    """A5: Z = 2 sum_l sqrt(W+ W-) per candidate (features 1-4 shown),
+    searched over the round-one state with x sliced to those features."""
+    state, _m = _uniform_state(_emb(spark, sf_dir))
+    cw = boosting.stump_class_weights(state, 4)
     return boosting.stump_z(cw).select(
         "feature", "threshold", F.round("z", 9).alias("z")
     )
@@ -300,9 +295,9 @@ FROM zs ORDER BY FLOOR(z * 1e9 + 0.5), feature, threshold LIMIT 1
 )
 def best_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A6: global argmin of Z over candidates (features 1-4 slice),
-    deterministic tiebreak. Uses the fused uniform-weight plan (see A5)."""
-    emb = _emb(spark, sf_dir)
-    zs = boosting.stump_z(boosting.uniform_class_weights(emb, 4, K, emb.count()))
+    deterministic tiebreak, over the round-one state (see A5)."""
+    state, _m = _uniform_state(_emb(spark, sf_dir))
+    zs = boosting.stump_z(boosting.stump_class_weights(state, 4))
     return boosting.best_stump_row(zs).select(
         "feature",
         F.round("threshold", 6).alias("threshold"),
@@ -364,10 +359,8 @@ FROM upd, z
 def weight_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A8: one reweighting round against the fixed stump, with global Z
     normalization (weight_rel = weight * mK for hash discrimination)."""
-    emb = _emb(spark, sf_dir)
-    weighted, m = _weighted_uniform(emb)
-    feats = boosting.explode_features(emb)
-    out = boosting.update_weights(weighted, feats, _STUMPS_FIXED[0], emb.sparkSession)
+    state, m = _uniform_state(_emb(spark, sf_dir))
+    out = boosting.long_form(boosting.update_weights(state, _STUMPS_FIXED[0]))
     return out.select(
         "id",
         "class",
@@ -829,26 +822,26 @@ def sparse_stump_z(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A5 over the SPARSE representation (SURVEY §1.1/§1.2: the reference
     accepts mllib sparse vectors; q_a1_sparse_parser ingests them).  The
     stump search runs on MAP<INT,DOUBLE> directly: only stored (non-zero)
-    entries explode and join weights; the weight mass of every IMPLICIT
+    entries explode, each with its row's class weights (map-side, no
+    join); the weight mass of every IMPLICIT
     zero is recovered per (feature, class) as total-class-mass minus
     observed-mass and injected as a single value=0.0 row before the
     prefix-sum window.
 
     Why this matters at 100 TB: with 1%-dense vectors the exploded frame
-    shrinks 100x versus the dense path — the join, pre-agg, and window all
+    shrinks 100x versus the dense path — the explode, pre-agg, and window all
     scale with STORED entries, while the zero mass costs one d x K-row
     side-aggregate.  The oracle is the DENSE pipeline over the same
     thresholded vectors, so the check proves the sparse path is
     numerically indistinguishable from materializing the zeros
     (representation-agnostic training)."""
-    emb = _emb(spark, sf_dir)
-    weighted, _m = _weighted_uniform(emb)
+    state, _m = _uniform_state(_emb(spark, sf_dir))
 
     # dense -> MAP<INT,DOUBLE> (1-based feature keys), |x| < 0.13 -> implicit
     smap = F.map_from_entries(
         F.filter(
             F.transform(
-                "embedding",
+                "x",
                 lambda x, i: F.when(
                     F.abs(x) >= 0.13,
                     F.struct((i + 1).alias("feature"), x.alias("value")),
@@ -857,15 +850,13 @@ def sparse_stump_z(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda s: s.isNotNull(),
         )
     )
-    sp = (
-        emb.select(F.col("vec_id").alias("id"), smap.alias("smap"))
-        .select("id", F.explode("smap").alias("feature", "value"))
-        .filter(F.col("feature") <= 4)
+    sp = state.select(F.explode(smap).alias("feature", "value"), "y", "w").filter(
+        F.col("feature") <= 4
     )
-    obs = boosting._weight_sums(sp.join(weighted, "id"))
+    obs = boosting._weight_sums(boosting._class_rows(sp, "feature", "value"))
     # implicit-zero mass: class totals are feature-independent (tiny agg),
     # observed mass per (feature, class) subtracts off
-    totals = boosting._weight_sums(weighted, ("class",)).select(
+    totals = boosting._weight_sums(boosting.long_form(state), ("class",)).select(
         "class", F.col("swp").alias("tp"), F.col("swm").alias("tm")
     )
     obs_tot = obs.groupBy("feature", "class").agg(
@@ -945,8 +936,8 @@ def abstain_stump_z(spark: SparkSession, sf_dir: str) -> DataFrame:
     (feature, value, class) frame the two-block search uses — no extra
     shuffle versus plain A5; both engines agree on inclusive range-frame
     boundaries (verified, see tests)."""
-    emb = _emb(spark, sf_dir)
-    grouped = boosting._weight_sums(boosting._uniform_rows(emb, 4, K, emb.count()))
+    state, _m = _uniform_state(_emb(spark, sf_dir))
+    grouped = boosting._weight_sums(boosting.search_rows(state, 4))
     d = ABSTAIN_DELTA
     frame = "PARTITION BY feature, class ORDER BY value"
     cum = grouped.select(
@@ -1194,18 +1185,15 @@ FROM cw GROUP BY feature, threshold
 def multilabel_stump_z(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A5 (cont.): the Z-criterion over TRUE MULTI-LABEL weights — stump
     search on the |Y_i| ∈ {1,2} label sets of q_a2_multilabel_weight_init,
-    via the GENERAL weighted path (stump_class_weights + stump_z), not the
-    single-label fused shortcut.  Proves the reference's actual multi-label
+    via the same state search (stump_class_weights + stump_z) as the
+    single-label queries.  Proves the reference's actual multi-label
     contract end-to-end: nothing in the candidate/prefix/Z machinery
     assumes singleton labels; only the y(i,l) table changes.
 
     Same plan shape as A5: one (feature,class)-partitioned prefix window
     over the pre-aggregated candidate weights."""
-    emb = _emb(spark, sf_dir)
-    mlp = boosting.mlp_long(_labelsets(emb), K)
-    weighted = boosting.init_weights(mlp, emb.count(), K)
-    feats = boosting.explode_features(emb).filter(F.col("feature") <= 4)
-    cw = boosting.stump_class_weights(weighted, feats)
+    state, _m = _uniform_state(_labelsets(_emb(spark, sf_dir)))
+    cw = boosting.stump_class_weights(state, 4)
     return boosting.stump_z(cw).select(
         "feature", "threshold", F.round("z", 9).alias("z")
     )

@@ -24,14 +24,12 @@ def stump_unit(spark):
     emb = spark.createDataFrame(
         rows, "vec_id BIGINT, embedding ARRAY<DOUBLE>, label INT"
     )
-    weighted = boosting.init_weights(boosting.mlp_long(emb, 2), 6, 2)
-    feats = boosting.explode_features(emb)
-    return emb, weighted, feats
+    return emb, boosting.init_state(emb, 6, 2)
 
 
 def test_stump_search_known_argmin(stump_unit):
-    emb, weighted, feats = stump_unit
-    stump = boosting.fit_stump(weighted, feats, m=6, num_classes=2)
+    emb, state = stump_unit
+    stump = boosting.fit_stump(state, m=6, num_classes=2)
     # separable at feature 1 between 0.3 and 0.4; threshold = last value of
     # the low block = 0.3 (phi: x > theta)
     assert stump.feature == 1
@@ -41,12 +39,31 @@ def test_stump_search_known_argmin(stump_unit):
     assert stump.z < 1.0  # better than chance
 
 
-def test_weight_update_normalizes(stump_unit, spark):
-    emb, weighted, feats = stump_unit
-    stump = boosting.fit_stump(weighted, feats, m=6, num_classes=2)
-    new_w = boosting.update_weights(weighted, feats, stump, spark)
-    total = new_w.agg(F.sum("weight")).collect()[0][0]
+def test_weight_update_normalizes(stump_unit):
+    emb, state = stump_unit
+    stump = boosting.fit_stump(state, m=6, num_classes=2)
+    new_state = boosting.update_weights(state, stump)
+    assert new_state.columns == ["id", "x", "y", "w"]
+    total = boosting.long_form(new_state).agg(F.sum("weight")).collect()[0][0]
     assert abs(total - 1.0) < 1e-9
+
+
+def test_train_calls_round_hooks_once_per_round(stump_unit, spark, monkeypatch):
+    """The loop must reach fit_stump and update_weights through the module
+    once per round: the benchmark's per-round spans wrap those names."""
+    emb, _state = stump_unit
+    calls = {"fit_stump": 0, "update_weights": 0}
+    for name in calls:
+        fn = getattr(boosting, name)
+
+        def counted(*args, _fn=fn, _name=name, **kwargs):
+            calls[_name] += 1
+            return _fn(*args, **kwargs)
+
+        monkeypatch.setattr(boosting, name, counted)
+    stumps = boosting.train(spark, emb, num_rounds=3, num_classes=2)
+    assert len(stumps) == 3
+    assert calls == {"fit_stump": 3, "update_weights": 3}
 
 
 def test_training_learns_separable_data(spark):

@@ -527,3 +527,26 @@ def test_docpipe_kept_avg_rounds_like_oracle_on_half_tie(spark, sf_dir, tmp_path
     rows = _Q["q_comp_docpipe"].fn(spark, str(tmp_path)).filter("lang = 'xx'").collect()
     assert [(r["n_docs"], r["kept_avg_token_len"]) for r in rows] == [(6, 9.544445)]
     compare(spark, "q_comp_docpipe", str(tmp_path))
+
+
+def test_pruned_lm_empty_holdout_yields_no_rows(spark, sf_dir, tmp_path):
+    """With no odd doc_id the held-out half is empty.  The oracle's
+    GROUP BY over the holdout then yields no row, so the sweep must return
+    0 rows, not one row per cutoff with a NULL cross-entropy."""
+    import shutil
+
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from spark_multiboost_spark.session import TABLES
+    from tests.harness import compare
+
+    for t in TABLES:
+        shutil.copy(f"{sf_dir}/{t}.parquet", tmp_path / f"{t}.parquet")
+    docs = pq.read_table(tmp_path / "documents.parquet")
+    even = docs.filter(pc.equal(pc.bit_wise_and(docs["doc_id"], 1), 0))
+    assert 0 < even.num_rows < docs.num_rows
+    pq.write_table(even, tmp_path / "documents.parquet")
+
+    assert _Q["q_d5_pruned_trigram_lm"].fn(spark, str(tmp_path)).count() == 0
+    compare(spark, "q_d5_pruned_trigram_lm", str(tmp_path))

@@ -637,3 +637,37 @@ def test_b34_hash_sample_plan(spark, sf_dir):
     # column pruning: only the 4 referenced columns reach the scan
     read = plan.split("ReadSchema")[1].split("\n")[0]
     assert "l_shipdate" not in read and "l_partkey" not in read
+
+
+def _shuffles(plan: str) -> list[str]:
+    """The partitioning of each non-broadcast Exchange in a formatted plan."""
+    return re.findall(r"^\(\d+\) Exchange\n(?:.*\n)*?Arguments: ([^,(]*)", plan, re.M)
+
+
+def test_boosting_round_plans(spark, sf_dir):
+    """One training round over a checkpointed wide state.  The stump search
+    explodes its rows map-side, so it joins nothing and shuffles at most
+    three times: the (feature, value, class) pre-aggregation, the
+    per-(feature, class) prefix windows and the per-candidate Z window.
+    The weight update is a map whose only shuffle is the 1-row normalizer.
+    The round-one query q_a5_stump_z keeps its three exchanges."""
+    from spark_multiboost_spark.ml import boosting
+    from spark_multiboost_spark.session import load_tables
+
+    emb = load_tables(spark, sf_dir)["embeddings"]
+    m = emb.count()
+    state = boosting.init_state(emb, m, 10).localCheckpoint(eager=True)
+    search = spark._jvm.PythonSQLUtils.explainString(
+        boosting._stump_rows(state, m, 10)._jdf.queryExecution(), "formatted"
+    )
+    assert "Join" not in search
+    assert "BroadcastExchange" not in search
+    assert 0 < len(_shuffles(search)) <= 3, _shuffles(search)
+
+    stump = boosting.Stump(t=0, feature=3, threshold=0.0, z=0.0, votes=[0.1] * 10)
+    update = spark._jvm.PythonSQLUtils.explainString(
+        boosting.update_weights(state, stump)._jdf.queryExecution(), "formatted"
+    )
+    assert _shuffles(update) == ["SinglePartition"], _shuffles(update)
+
+    assert _plan(spark, "q_a5_stump_z", sf_dir).count("Exchange (") == 3

@@ -5,15 +5,21 @@ correctness story leans on:
    the same sum at ANY partitioning (this is what makes results
    reproducible on a cluster);
 2. the salted two-stage prefix-sum equals the global prefix-sum on
-   arbitrary weighted frames (not just the fixtures), and the fused
-   round-one search equals the join formulation on arbitrary tables;
+   arbitrary weighted frames (not just the fixtures), and the search over
+   the wide state equals the features-x-weights join formulation on
+   arbitrary tables;
 3. the blocked-matmul scorer's strict left-to-right accumulation is
-   bit-identical to a scalar sequential loop (the DuckDB/Catalyst fold).
+   bit-identical to a scalar sequential loop (the DuckDB/Catalyst fold);
+4. training equals the independent numpy AdaBoost.MH reference, and the
+   distribution sums to 1 after every weight update.
 """
 
 from __future__ import annotations
 
+import importlib.util
+import os
 from decimal import Decimal
+from unittest import mock
 
 import numpy as np
 from hypothesis import given, settings, strategies as st
@@ -81,8 +87,9 @@ def test_salted_prefix_equals_global(spark, data):
             for r in df.select(*cols).collect()
         )
 
-    plain = norm(boosting.stump_class_weights(weighted, feats))
-    salted = norm(boosting.stump_class_weights_salted(weighted, feats, n_buckets=3))
+    rows = feats.join(weighted, "id")
+    plain = norm(boosting._class_weights(boosting._weight_sums(rows)))
+    salted = norm(boosting.stump_class_weights_salted(rows, n_buckets=3))
     assert plain == salted
 
 
@@ -93,10 +100,11 @@ def test_salted_prefix_equals_global(spark, data):
     d=st.integers(1, 4),
     k=st.integers(2, 4),
 )
-def test_fused_uniform_search_equals_join(spark, data, m, d, k):
-    """uniform_class_weights (round one, no feats-x-weights join) must give
-    the same W_+ / W_- as stump_class_weights over the uniform long frame,
-    on tables whose values repeat within and across features."""
+def test_state_search_equals_join(spark, data, m, d, k):
+    """The search over the wide state (rows exploded map-side, no join)
+    must give the same W_+ / W_- as joining exploded features with the
+    long-form uniform weights, on tables whose values repeat within and
+    across features."""
     from spark_multiboost_spark.ml import boosting
 
     n_feats = data.draw(st.integers(1, d), label="num_features")
@@ -115,11 +123,75 @@ def test_fused_uniform_search_equals_join(spark, data, m, d, k):
             for r in df.collect()
         )
 
-    fused = norm(boosting.uniform_class_weights(emb, n_feats, k, m))
-    weighted = boosting.init_weights(boosting.mlp_long(emb, k), m, k)
+    wide = norm(boosting.stump_class_weights(boosting.init_state(emb, m, k), n_feats))
+    weighted = boosting.mlp_long(emb, k).withColumn("weight", F.lit(1.0 / (m * k)))
     feats = boosting.explode_features(emb).filter(F.col("feature") <= n_feats)
-    joined = norm(boosting.stump_class_weights(weighted, feats))
-    assert fused == joined
+    long_rows = feats.join(weighted, "id")
+    joined = norm(boosting._class_weights(boosting._weight_sums(long_rows)))
+    assert wide == joined
+
+
+def _numpy_reference():
+    """perfbench's independent numpy AdaBoost.MH, imported read-only."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    path = os.path.join(root, "perfbench", "reference.py")
+    spec = importlib.util.spec_from_file_location("boosting_numpy_reference", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+@settings(max_examples=8, deadline=None)
+@given(
+    data=st.data(),
+    m=st.integers(1, 10),
+    d=st.integers(1, 3),
+    k=st.integers(2, 4),
+    label_sets=st.booleans(),
+)
+def test_train_matches_numpy_reference(spark, data, m, d, k, label_sets):
+    """boosting.train picks the reference's exact (feature, threshold) each
+    round with votes within 1e-9, on single labels and label sets with
+    repeated values; after every update the state's w sums to 1."""
+    from spark_multiboost_spark.ml import boosting
+
+    value = st.sampled_from([-1.0, -0.25, 0.0, 0.5, 2.0])
+    x = [data.draw(st.lists(value, min_size=d, max_size=d)) for _ in range(m)]
+    one_label = st.integers(0, k - 1).map(lambda c: [c])
+    labels = st.lists(st.integers(0, k - 1), min_size=1, max_size=k, unique=True)
+    ys = [sorted(data.draw(labels if label_sets else one_label)) for _ in range(m)]
+    y = -np.ones((m, k), dtype=np.int64)
+    for i, ls in enumerate(ys):
+        y[i, ls] = 1
+    if label_sets:
+        rows = [(i, x[i], ys[i]) for i in range(m)]
+        schema = "vec_id bigint, embedding array<double>, labels array<int>"
+    else:
+        rows = [(i, x[i], ys[i][0]) for i in range(m)]
+        schema = "vec_id bigint, embedding array<double>, label int"
+    emb = spark.createDataFrame(rows, schema)
+
+    sums = []
+    update = boosting.update_weights
+
+    def checked_update(state, stump):
+        out = update(state, stump)
+        row_sum = F.aggregate("w", F.lit(0.0), lambda acc, w: acc + w)
+        sums.append(out.agg(F.sum(row_sum)).collect()[0][0])
+        return out
+
+    rounds = 3
+    with mock.patch.object(boosting, "update_weights", checked_update):
+        got = boosting.train(
+            spark, emb, num_rounds=rounds, num_classes=k,
+            label_set_col="labels" if label_sets else None,
+        )
+    want = _numpy_reference().train(np.asarray(x, dtype=np.float64), y, rounds)
+    for s, (f, thr, votes) in zip(got, want, strict=True):
+        assert (s.feature, s.threshold) == (f, thr), (s, f, thr)
+        assert np.max(np.abs(np.asarray(s.votes) - votes)) <= 1e-9, (s.votes, votes)
+    assert len(sums) == rounds
+    assert all(abs(total - 1.0) <= 1e-12 for total in sums), sums
 
 
 @settings(max_examples=30, deadline=None)
